@@ -48,6 +48,12 @@ DV_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 # reader sees so very large scans grow the index in bounded steps
 SCAN_READ_BATCH = 100_000
 
+# above this many manifest entries, planners that can keep entries off the
+# driver (scan pruning, the changelog entry diff, cluster with its
+# replace_all commit) run as a Spark job over entries_df. Compaction and
+# MERGE always plan on the driver: their commits read every entry anyway.
+DISTRIBUTED_PLANNING_ENTRIES = 10_000
+
 
 class IncrementalScanError(RuntimeError):
     """The requested snapshot range is not expressible as an append-only
@@ -220,6 +226,13 @@ class Table:
             n = pq.read_metadata(os.path.join(self.metadata_dir, manifest)).num_rows
             self._manifest_counts[manifest] = n
         return n
+
+    def plans_distributed(self, manifests: Sequence[str]) -> bool:
+        """Whether planning over ``manifests`` should run as a Spark job:
+        their entry count, from memoized manifest footers (no entry is read
+        and no job runs to decide), exceeds DISTRIBUTED_PLANNING_ENTRIES."""
+        n = sum(self._manifest_num_rows(m) for m in manifests)
+        return n > DISTRIBUTED_PLANNING_ENTRIES
 
     # ---- basics -----------------------------------------------------------
     @property
@@ -591,17 +604,14 @@ class Table:
         removed-only entries, [(path, new_dv_paths, gone_dv_paths)] for
         shared paths whose tombstone set moved).
 
-        Driver route below ``scan.plan-distributed-threshold`` footer rows.
-        Beyond it — a DV or overwrite commit rewrites EVERY manifest, so a
-        10^6-file table would otherwise materialize 2×10^6 entries on the
-        driver — the diff runs as a Spark full-outer join on path over the
-        two manifest sets, unchanged files (same path, same DV set) are
-        dropped executor-side, and the driver collects only the CHANGED
-        files: O(changed), mirroring ``_plan_scan_distributed``."""
-        n = sum(
-            self._manifest_num_rows(m) for m in removed_manifests + added_manifests
-        )
-        if n <= self.prop_int("scan.plan-distributed-threshold", 10_000):
+        Driver route unless :meth:`plans_distributed`. Beyond it — a DV or
+        overwrite commit rewrites EVERY manifest, so a 10^6-file table
+        would otherwise materialize 2×10^6 entries on the driver — the diff
+        runs as a Spark full-outer join on path over the two manifest sets,
+        unchanged files (same path, same DV set) are dropped executor-side,
+        and the driver collects only the CHANGED files: O(changed),
+        mirroring ``_plan_scan_distributed``."""
+        if not self.plans_distributed(removed_manifests + added_manifests):
             return diff_commit_entries(
                 self.metadata_dir, removed_manifests, added_manifests
             )
@@ -683,8 +693,8 @@ class Table:
         Iceberg scan planning; Parquet row-group pushdown still applies
         afterwards inside Spark's reader).
 
-        Above ``scan.plan-distributed-threshold`` entries (10^4 default,
-        counted from manifest FOOTERS — no entry is read to decide) the
+        When :meth:`plans_distributed` (above 10^4 entries, counted from
+        manifest FOOTERS — no entry is read to decide) the
         pruning itself runs as a Spark job over ``entries_df``: the driver
         never materializes a ManifestEntry for a pruned-out file and holds
         only the surviving (path, deletes) pairs — the minimum a path-list
@@ -701,8 +711,7 @@ class Table:
             # computed once here; both planners — and, distributed, every
             # executor task via the pickled predicate — reuse it per file
             prune = prepare_predicates(prune)
-        n_entries = sum(self._manifest_num_rows(m) for m in snap.manifests)
-        if n_entries > self.prop_int("scan.plan-distributed-threshold", 10_000):
+        if self.plans_distributed(snap.manifests):
             pairs = self._plan_scan_distributed(spark, snap, prune)
         else:
             entries = mf.read_manifests(self.metadata_dir, snap.manifests)

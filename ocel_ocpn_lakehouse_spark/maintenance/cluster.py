@@ -53,7 +53,6 @@ from pyspark.sql import functions as F
 
 from ..core import manifests as mf
 from ..core.table import Table
-from . import compact
 from .checkpoint import SystemTables
 
 ZKEY_COL = "_zkey"
@@ -106,7 +105,6 @@ def execute_cluster(
     curve: str = "zorder",  # zorder | hilbert | hash
     key_cols: list[str] | None = None,
     job_id: str | None = None,
-    planning: str = "auto",  # auto | driver | distributed
 ) -> dict:
     t0 = time.time()
     phases: dict[str, float] = {}
@@ -125,11 +123,11 @@ def execute_cluster(
     root = table.root
 
     # --- 0. planning: per-partition byte/record totals + the file relation.
-    # 'driver' materializes the manifest entries (fine to ~10^4 files);
-    # 'distributed' keeps them in entries_df — the driver sees only one
-    # aggregate row per table partition plus the plan scalars, so a
-    # 10^7-file table plans without manifests ever becoming driver objects
-    # (same routing as compaction's plan_compaction_distributed).
+    # 'driver' materializes the manifest entries; 'distributed' (when
+    # table.plans_distributed) keeps them in entries_df — the driver sees
+    # only one aggregate row per table partition plus the plan scalars, and
+    # the replace_all commit never reads them either, so a 10^7-file table
+    # plans and commits without manifests ever becoming driver objects.
     edf = table.entries_df(spark).select(
         "path",
         "partition",
@@ -144,12 +142,7 @@ def execute_cluster(
         "from_json(deletes, 'array<struct<path:string,count:bigint>>'), "
         "0L, (a, x) -> a + x.count), 0L)"
     )
-    if planning == "auto":
-        # routing count from memoized manifest FOOTERS (same zero-job path
-        # compact.plan_auto uses) — an edf.count() here scheduled one
-        # redundant Spark job per cluster pass
-        n_entries = sum(table._manifest_num_rows(m) for m in snap.manifests)
-        planning = "distributed" if n_entries > compact.PLAN_DISTRIBUTED_THRESHOLD else "driver"
+    planning = "distributed" if table.plans_distributed(snap.manifests) else "driver"
     removed: set[str] | None
     if planning == "driver":
         entries = table.live_entries()

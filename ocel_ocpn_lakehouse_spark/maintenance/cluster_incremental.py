@@ -46,12 +46,11 @@ driver-built group spans exactly like the cluster map's bucket routing):
    files, guarded by expected DV counts and row-count equality
    (delta live + touched-base live == rows written).
 
-Planning is driver-side over ``live_entries`` — O(#files) interval
-metadata, the same envelope as the driver planning path in
-compact/cluster; beyond PLAN_DISTRIBUTED_THRESHOLD entries the interval
-table and the searchsorted classification are expressible over
-``entries_df`` exactly like ``plan_compaction_distributed`` (the probe
-and route passes are already distributed Arrow tasks either way).
+Planning is driver-side over ``live_entries`` at any table size — O(#files)
+interval metadata, like compaction and MERGE: the ``commit_replace`` that
+ends the pass reads every live entry anyway, so planning over
+``entries_df`` would not lower peak driver memory (the probe and route
+passes are distributed Arrow tasks either way).
 
 Fallbacks keep the operator total: no base stamps → full
 ``execute_cluster`` (first layout); a different curve than the last

@@ -6,7 +6,10 @@ total_size // 256 MB, "would require rewrite" (ops/maintenance_system.py:
 
   plan   : per-partition first-fit-decreasing of small files into bins of
            ≤ target file size (driver, manifest-only — same split as the
-           reference's metadata-only planner, §3.3).
+           reference's metadata-only planner, §3.3). Always on the driver,
+           at any table size: the replace commit reads every live entry
+           anyway, so a Spark-job planner would not lower peak driver
+           memory (BENCH/METADATA_STRESS.md).
   execute: ONE distributed job, ZERO shuffles, O(1) driver plan. The job
            iterates over the group SPECS (tiny metadata rows); each task
            rewrites whole groups via Arrow: read the group's files with
@@ -134,145 +137,6 @@ def plan_compaction(
     return groups
 
 
-def plan_compaction_distributed(
-    spark: SparkSession,
-    table: Table,
-    include_all: bool = False,
-    min_group_files: int = 2,
-) -> list[FileGroup]:
-    """The same FFD plan as :func:`plan_compaction`, computed over
-    ``entries_df`` so manifests never materialize as driver objects.
-
-    At the 10^12-row design point a table holds 10^5–10^7 files; loading
-    every ManifestEntry (with its stats JSON) onto the driver just to plan
-    is the kind of driver bottleneck the manifest layer promises to avoid.
-    Here the manifest scan + small-file filter + per-partition first-fit-
-    decreasing all run as one Spark job (applyInPandas per partition — the
-    packing is per-partition sequential by definition, so partition is the
-    right parallelism unit), and the driver collects only the plan rows
-    (group id, member paths, totals). Output is byte-identical to the
-    driver planner (same sort, same bins, same sha1 group ids) — asserted
-    by test_distributed_planner_parity.
-    """
-    import pandas as pd
-
-    target = table.target_file_size
-    small = table.small_file_bytes
-    e = table.entries_df(spark).select(
-        "path",
-        "partition",
-        "size_bytes",
-        "record_count",
-        F.coalesce(F.col("deletes"), F.lit("[]")).alias("deletes"),
-    )
-    if not include_all:
-        # same candidacy as the driver planner: small OR tombstoned
-        e = e.filter((F.col("size_bytes") < small) | (F.col("deletes") != "[]"))
-
-    def ffd(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(
-            ["size_bytes", "path"], ascending=[False, True], kind="mergesort"
-        )
-        bins: list[list[int]] = []
-        bin_sizes: list[int] = []
-        idx = list(pdf.index)
-        for i in idx:
-            sz = int(pdf.at[i, "size_bytes"])
-            placed = False
-            for b, bsz in enumerate(bin_sizes):
-                if bsz + sz <= target:
-                    bins[b].append(i)
-                    bin_sizes[b] += sz
-                    placed = True
-                    break
-            if not placed:
-                bins.append([i])
-                bin_sizes.append(sz)
-        out = []
-        part = pdf["partition"].iloc[0] if len(pdf) else "{}"
-        for b in bins:
-            dvs = {}
-            live = 0
-            for i in b:
-                dels = json.loads(pdf.at[i, "deletes"] or "[]")
-                live += int(pdf.at[i, "record_count"]) - sum(int(d["count"]) for d in dels)
-                if dels:
-                    dvs[pdf.at[i, "path"]] = [d["path"] for d in dels]
-            if len(b) < min_group_files and not dvs:
-                continue
-            paths = [pdf.at[i, "path"] for i in b]
-            out.append(
-                {
-                    "partition": part,
-                    "group_id": _group_id(paths, dvs),
-                    "input_paths": paths,
-                    "input_bytes": int(sum(int(pdf.at[i, "size_bytes"]) for i in b)),
-                    "input_records": live,
-                    "input_dvs": json.dumps(dvs, sort_keys=True),
-                }
-            )
-        return pd.DataFrame(
-            out,
-            columns=[
-                "partition", "group_id", "input_paths", "input_bytes",
-                "input_records", "input_dvs",
-            ],
-        )
-
-    rows = (
-        e.groupBy("partition")
-        .applyInPandas(
-            ffd,
-            "partition string, group_id string, input_paths array<string>, "
-            "input_bytes long, input_records long, input_dvs string",
-        )
-        .collect()
-    )
-    groups = [
-        FileGroup(
-            group_id=r["group_id"],
-            partition=json.loads(r["partition"]),
-            input_paths=list(r["input_paths"]),
-            input_bytes=r["input_bytes"],
-            input_records=r["input_records"],
-            input_dvs=json.loads(r["input_dvs"] or "{}"),
-        )
-        for r in rows
-    ]
-    groups.sort(key=lambda g: (json.dumps(g.partition, sort_keys=True), g.group_id))
-    return groups
-
-
-# manifests beyond this many entries plan distributed (entries never
-# materialize driver-side); shared by execute_compaction and --op auto
-PLAN_DISTRIBUTED_THRESHOLD = 10_000
-
-
-def plan_auto(
-    spark: SparkSession,
-    table: Table,
-    include_all: bool = False,
-    min_group_files: int = 2,
-) -> list[FileGroup]:
-    """Planner routing in ONE place: driver FFD for small manifests,
-    distributed over entries_df beyond PLAN_DISTRIBUTED_THRESHOLD. The
-    routing count comes from manifest FOOTERS (memoized on the Table —
-    the same mechanism Table.scan routes with), not a Spark count job."""
-    snap = table.current_snapshot()
-    n_entries = (
-        sum(table._manifest_num_rows(m) for m in snap.manifests) if snap else 0
-    )
-    if n_entries > PLAN_DISTRIBUTED_THRESHOLD:
-        return plan_compaction_distributed(spark, table, include_all, min_group_files)
-    return plan_compaction(table, include_all, min_group_files)
-
-
-def estimate_files_after(table: Table) -> int:
-    """The reference's simulation formula (ops/maintenance_system.py:139-141)."""
-    total = sum(e.size_bytes for e in table.live_entries())
-    return max(1, total // table.target_file_size + (1 if total % table.target_file_size else 0))
-
-
 def _norm_path_sql(col):
     # 'file:///root/x' | '/root/x' | 's3://b/k' → scheme/leading-slash-free
     return F.regexp_replace(col, r"^([a-zA-Z0-9]+:)?/+", "")
@@ -306,7 +170,7 @@ def execute_compaction(
     if snap is None:
         return {"status": "empty-table", "groups": 0}
     if groups is None:
-        groups = plan_auto(spark, table)
+        groups = plan_compaction(table)
     phases["plan"] = time.time() - t0
     if not groups:
         return {"status": "healthy", "groups": 0}

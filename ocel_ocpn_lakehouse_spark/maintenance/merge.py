@@ -22,11 +22,12 @@ Copy-on-write at FILE granularity:
   4. old snapshot still references the pre-merge files → time travel
      reproduces pre-merge results.
 
-Planning routes like compaction/clustering: below ~10^4 files the manifest
-is materialized on the driver; above, planning runs over ``entries_df`` —
-the driver collects only bucket-pruned path strings for the probe and the
-touched files' entry rows (bounded by the source key count), never the
-whole manifest.
+Planning reads the live manifest entries on the driver at any table size,
+like compaction: the commit that ends the op (``commit_replace`` for CoW,
+``commit_delete_vectors`` for MoR) reads every live entry anyway, so a
+Spark-job planner over ``entries_df`` would not lower peak driver memory.
+The same entries size the upsert files, so neither planning nor sizing
+runs a Spark job.
 
 ``strategy='mor'`` (or table property ``write.merge.mode=merge-on-read``)
 switches step 3 to Iceberg-v2 merge-on-read: matched target rows become
@@ -172,6 +173,16 @@ def _rewrite_touched_arrow(spark, table, touched_entries, key_set, key):
     return entries, n_rows
 
 
+def _upsert_sizer(table: Table, entries: list):
+    """``n_rows → number of files`` for upsert writes at the table's target
+    file size, using the average on-disk row width of ``entries`` (8 KiB
+    when the table holds no bytes yet)."""
+    total_bytes = sum(e.size_bytes for e in entries)
+    total_rows = sum(e.record_count for e in entries)
+    avg_row = (total_bytes / max(1, total_rows)) if total_bytes else 8192
+    return lambda n_rows: max(1, -(-int(n_rows * avg_row) // table.target_file_size))
+
+
 def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
     """True iff some source key falls in the file's [lo, hi] key range.
 
@@ -194,23 +205,22 @@ def _any_key_in_bounds(sorted_keys: list, lo, hi) -> bool:
         return True
 
 
-def _probe_touched_arrow(spark, table, specs, key_list, key) -> tuple[set, dict]:
+def _probe_touched_arrow(spark, table, entries, key_list, key) -> tuple[set, dict]:
     """Touched-file probe as an Arrow key-column job.
 
-    ``specs`` is a DataFrame of (path, lo, hi, bloom) metadata rows —
-    relative path plus lower/upper-bounds and bloom JSON; in distributed
-    planning it flows straight from ``entries_df``, so the driver never
-    holds a per-file object on the probe path. Returns the set of RELATIVE
-    paths of files holding ≥1 source key. Each one-core task prunes in
-    cost order before any I/O: (1) manifest key bounds (bisect over the
-    sorted broadcast keys — prunes when files are clustered on the key),
-    (2) the file's manifest Bloom filter (vectorized gather against the
-    pre-hashed key matrix — prunes on ANY layout, the case bounds cannot
-    help; absence = might-contain), then (3) reads only the key column of
-    surviving files (pyarrow, through ``read_table_nullfill`` so
-    post-evolution key columns null-fill) and set-probes it against the
-    broadcast source keys.
+    The candidate manifest ``entries`` ship to tasks as (path, lo, hi,
+    bloom) rows — relative path plus lower/upper-bounds and bloom JSON.
+    Returns the set of RELATIVE paths of files holding ≥1 source key.
+    Each one-core task prunes in cost order before any I/O: (1) manifest
+    key bounds (bisect over the sorted broadcast keys — prunes when files
+    are clustered on the key), (2) the file's manifest Bloom filter
+    (vectorized gather against the pre-hashed key matrix — prunes on ANY
+    layout, the case bounds cannot help; absence = might-contain), then
+    (3) reads only the key column of surviving files (pyarrow, through
+    ``read_table_nullfill`` so post-evolution key columns null-fill) and
+    set-probes it against the broadcast source keys.
     """
+    import json
     import os
 
     from ..core import manifests as mf
@@ -253,6 +263,18 @@ def _probe_touched_arrow(spark, table, specs, key_list, key) -> tuple[set, dict]
                     hits.append(rp)
             yield pd.DataFrame({"path": pd.Series(hits, dtype="object")})
 
+    specs = spark.createDataFrame(
+        [
+            (
+                e.path,
+                json.dumps(e.lower_bounds, default=str),
+                json.dumps(e.upper_bounds, default=str),
+                json.dumps(e.blooms),
+            )
+            for e in entries
+        ],
+        "path string, lo string, hi string, bloom string",
+    )
     n_parts = spark.sparkContext.defaultParallelism * 4
     out = specs.repartition(n_parts).mapInPandas(_task, "path string")
     touched = {r["path"] for r in out.collect()}
@@ -272,11 +294,35 @@ def merge_into(
     op_col: str = "_op",
     sys_tables: SystemTables | None = None,
     table_name: str = "",
-    planning: str = "auto",  # auto | driver | distributed
     strategy: str | None = None,  # cow | mor (default: table write.merge.mode, else cow)
     extra_summary: dict | None = None,  # merged into the commit summary (e.g. stream epoch)
     set_properties: dict | None = None,  # atomic with the commit (e.g. stream max-epoch)
 ) -> dict:
+    """MERGE ``source`` into ``table`` by ``key`` in ONE snapshot.
+
+    Each source row carries ``op_col`` ∈ {'upsert', 'delete'} (any other
+    value raises ValueError before anything is written). Every target row
+    whose key appears in the source — under either op — is removed, and
+    every upsert row is inserted, so an upsert replaces a matching row or
+    inserts a new one, and a delete removes it or is a no-op. NULL keys
+    never match.
+
+    ``strategy`` picks how matched rows leave (default: the table's
+    ``write.merge.mode`` property, else 'cow'): 'cow' rewrites each
+    touched file without them (``commit_replace``); 'mor' tombstones
+    their positions in one delete vector and rewrites no data file
+    (``commit_delete_vectors``). Both give the same table contents.
+
+    The source is not deduplicated: a key's target rows are removed once,
+    but EVERY upsert source row is inserted — k upsert rows for one key
+    leave k rows with that key, and an upsert row still inserts when a
+    delete row for the same key rides along.
+
+    Returns a report dict: ``status`` ('committed', or 'no-op' for a MoR
+    merge that matched and inserted nothing), ``snapshot_id``,
+    ``source_rows``, ``touched_files``, ``files_added`` and the probe's
+    pruning counts under ``probe``.
+    """
     t0 = time.time()
     strategy = (strategy or table.properties.get("write.merge.mode", "cow")).lower()
     strategy = {"copy-on-write": "cow", "merge-on-read": "mor"}.get(strategy, strategy)
@@ -329,78 +375,17 @@ def merge_into(
 
         import os
 
-        # planning: 'driver' materializes the manifest (fine to ~10^4 files);
-        # 'distributed' keeps entries in entries_df — probe specs flow to the
-        # Arrow probe as a DataFrame (nothing per-file on the driver in the
-        # common path), and only the touched files' entry rows (bounded by
-        # the source key count, metadata-sized) are ever collected; the
-        # huge-source fallback alone collects the pruned path list (same
-        # routing as plan_compaction_distributed / execute_cluster)
-        if planning == "auto":
-            planning = (
-                "distributed" if table.entries_df(spark).count() > 10_000 else "driver"
-            )
-        if planning == "driver":
-            entries = table.live_entries()
-            probe_entries = entries
-            if buckets is not None:
-                probe_entries = [
-                    e
-                    for e in entries
-                    if e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
-                    or not e.partition
-                ]
-            import json as _json
-
-            spec_df = spark.createDataFrame(
-                [
-                    (
-                        e.path,
-                        _json.dumps(e.lower_bounds, default=str),
-                        _json.dumps(e.upper_bounds, default=str),
-                        _json.dumps(e.blooms),
-                    )
-                    for e in probe_entries
-                ],
-                "path string, lo string, hi string, bloom string",
-            )
-
-            def _fallback_paths() -> list:
-                return [e.path for e in probe_entries]
-
-            by_path = {e.path: e for e in entries}
-
-            def _touched_from(rels: set) -> list:
-                return [by_path[p] for p in sorted(rels)]
-
-        else:
-            edf = table.entries_df(spark)
-            pedf = edf
-            if buckets is not None:
-                bval = F.coalesce(
-                    F.get_json_object("partition", f"$.{bf.name}"),
-                    F.get_json_object("partition", f"$.{bf.partition_column}"),
-                ).cast("int")
-                pedf = edf.filter(bval.isin(*buckets) | bval.isNull())
-            spec_df = pedf.select(
-                "path",
-                F.col("lower_bounds").alias("lo"),
-                F.col("upper_bounds").alias("hi"),
-                F.coalesce(F.col("blooms"), F.lit("{}")).alias("bloom"),
-            )
-
-            def _fallback_paths() -> list:
-                return [r["path"] for r in pedf.select("path").collect()]
-
-            def _touched_from(rels: set) -> list:
-                if not rels:
-                    return []
-                from ..core import manifests as mf
-
-                rel_df = spark.createDataFrame([(p,) for p in rels], "path string")
-                rows = edf.join(F.broadcast(rel_df), "path").collect()
-                got = {r["path"]: mf.ManifestEntry.from_row(r.asDict()) for r in rows}
-                return [got[p] for p in sorted(rels)]
+        # driver-side planning at any table size: the commit below reads
+        # every live entry anyway (module docstring)
+        entries = table.live_entries()
+        probe_entries = entries
+        if buckets is not None:
+            probe_entries = [
+                e
+                for e in entries
+                if e.partition.get(bf.name, e.partition.get(bf.partition_column)) in buckets
+                or not e.partition
+            ]
 
         probe_stats: dict = {}
         if key_list is not None:
@@ -412,13 +397,13 @@ def merge_into(
             # files); the Arrow footer read + one-column decode is the same
             # cost model as every other maintenance task here.
             touched_rel, probe_stats = _probe_touched_arrow(
-                spark, table, spec_df, key_list, key
+                spark, table, probe_entries, key_list, key
             )
         else:
             # huge source: keys don't fit a broadcast set — JVM scan +
             # distributed semi-join probe (the key column still prunes at
             # the parquet reader; per-file setup amortizes over the big read)
-            fb_paths = _fallback_paths()
+            fb_paths = [e.path for e in probe_entries]
             if not fb_paths:
                 touched_rel = set()
             else:
@@ -436,7 +421,12 @@ def merge_into(
                     .collect()
                 }
 
-        touched_entries = _touched_from(touched_rel)
+        by_path = {e.path: e for e in entries}
+        touched_entries = [by_path[p] for p in sorted(touched_rel)]
+        upsert_num_files = _upsert_sizer(table, entries)
+        # the commit re-reads every live entry: drop the plan-time copy so
+        # the driver never holds the manifest twice
+        del entries, probe_entries, by_path
 
         # --- 3: rewrite touched files + write all upserts
         upserts = src.filter(F.col(op_col) == "upsert").select(*data_cols)
@@ -472,14 +462,9 @@ def merge_into(
                 rel_dv, counts = write_delete_vector(spark, table, hits, prefix)
             n_upserts_mor = upserts.count()
             if n_upserts_mor:
-                tot = (
-                    table.entries_df(spark)
-                    .agg(F.sum("size_bytes").alias("b"), F.sum("record_count").alias("r"))
-                    .first()
+                new_entries = table.write_data_files(
+                    upserts, num_files=upsert_num_files(n_upserts_mor)
                 )
-                avg_row = (tot["b"] / max(1, tot["r"])) if tot["b"] else 8192
-                nf = max(1, -(-int(n_upserts_mor * avg_row) // table.target_file_size))
-                new_entries = table.write_data_files(upserts, num_files=int(nf))
             if not counts and not new_entries:
                 return {"status": "no-op", "strategy": "mor", "source_rows": n_src}
             snap = table.commit_delete_vectors(
@@ -546,14 +531,9 @@ def merge_into(
 
         n_upserts = upserts.count()
         if n_upserts:
-            tot = (
-                table.entries_df(spark)
-                .agg(F.sum("size_bytes").alias("b"), F.sum("record_count").alias("r"))
-                .first()
+            new_entries = new_entries + table.write_data_files(
+                upserts, num_files=upsert_num_files(n_upserts)
             )
-            avg_row = (tot["b"] / max(1, tot["r"])) if tot["b"] else 8192
-            n_files = max(1, -(-int(n_upserts * avg_row) // table.target_file_size))
-            new_entries = new_entries + table.write_data_files(upserts, num_files=int(n_files))
             n_new_rows += n_upserts
 
         snap = table.commit_replace(

@@ -191,10 +191,9 @@ def main(argv=None) -> int:
         from .retry import run_with_conflict_retry
 
         if args.op in ("compact", "full"):
-            # groups=None → execute_compaction routes the planning itself
-            # (driver FFD for small manifests, distributed planner over
-            # entries_df beyond 10k entries); a lost concurrency race
-            # replans from the refreshed table and retries
+            # groups=None → execute_compaction plans on the driver (its
+            # replace commit reads every entry anyway); a lost concurrency
+            # race replans from the refreshed table and retries
             rep["compaction"] = run_with_conflict_retry(
                 lambda: execute_compaction(spark, t.refresh(), sys_tables, table_name),
                 t, retries=args.retries,
@@ -249,9 +248,8 @@ def main(argv=None) -> int:
             # or absorb tombstones, so a small-but-packed table is 'none'
             # instead of looping on an avg-size threshold. Health pre-gates
             # the probe — a table with no small-file or tombstone debt
-            # skips the planning job entirely (at 10^6 files that probe is
-            # itself a distributed job worth not paying twice).
-            from .compact import plan_auto
+            # skips the manifest read planning costs.
+            from .compact import plan_compaction
 
             # tombstone debt routes by DEAD-ROW ratio: a table whose files
             # merely reference many small DV files (heavy CDC, few rows
@@ -262,7 +260,7 @@ def main(argv=None) -> int:
             absorb = float(t.properties.get("compact.dead-row-absorb-ratio", 0.05))
             plan = []
             if h.small_files >= 2 or (h.tombstoned_files > 0 and dead_ratio >= absorb):
-                plan = plan_auto(spark, t)
+                plan = plan_compaction(t)
             rep["plan_groups"] = len(plan)
             needs_rewrite = bool(plan)
             if needs_rewrite:

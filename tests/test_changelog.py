@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocel_ocpn_lakehouse_spark.core import Catalog, PartitionSpec, SortOrder, TableSpec
+from ocel_ocpn_lakehouse_spark.core import table as table_mod
 from ocel_ocpn_lakehouse_spark.core.table import IncrementalScanError
 from ocel_ocpn_lakehouse_spark.images.synth import (
     IMAGE_SCHEMA,
@@ -157,13 +158,14 @@ def test_rollback_past_delete_resurrects_as_insert(spark, warehouse):
     _assert_apply_parity(spark, t, s1)
 
 
-def test_changelog_distributed_diff_parity(spark, warehouse):
+def test_changelog_distributed_diff_parity(spark, warehouse, monkeypatch):
     """Force the distributed entry-diff route (threshold=1) through a
     mixed append → MoR delete → CoW merge history and assert the same
     apply-parity contract the driver route carries. A DV/overwrite commit
     rewrites every manifest, so at warehouse scale the diff must not
     materialize O(table) entries on the driver — this pins the Spark-job
     route's correctness."""
+    monkeypatch.setattr(table_mod, "DISTRIBUTED_PLANNING_ENTRIES", 1)
     cat = Catalog(warehouse)
     t = cat.create_table(
         "ocel.images",
@@ -171,7 +173,7 @@ def test_changelog_distributed_diff_parity(spark, warehouse):
         TableSpec(
             partition_spec=PartitionSpec.bucket("image_id", 2),
             sort_order=SortOrder.by("phash"),
-            properties={**PROPS, "scan.plan-distributed-threshold": "1"},
+            properties=PROPS,
         ),
     )
     t.append(

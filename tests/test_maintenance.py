@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ocel_ocpn_lakehouse_spark.core import Catalog, PartitionSpec, SortOrder, TableSpec
+from ocel_ocpn_lakehouse_spark.core import table as table_mod
 from ocel_ocpn_lakehouse_spark.core.table import PrunePredicate
 from ocel_ocpn_lakehouse_spark.images.synth import (
     IMAGE_SCHEMA,
@@ -250,24 +251,32 @@ def test_merge_upsert_delete_against_oracle(spark, warehouse):
     assert t.scan(spark, snapshot_id=pre_snap).count() == 200
 
 
-def test_merge_distributed_planning_parity(spark, warehouse):
-    """Forced-distributed merge planning (entries_df, no driver manifest
-    materialization) commits the identical post-merge table state as the
-    default driver planner on a second identical table."""
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_merge_plans_without_entries_df(spark, warehouse, monkeypatch, strategy):
+    """MERGE plans from the live entries it already holds: neither
+    planning nor upsert-file sizing may schedule a Spark job over
+    entries_df, under either strategy."""
+    from ocel_ocpn_lakehouse_spark.core.table import Table
+
+    _, t = fragmented_table(spark, warehouse, n_rows=200, n_files=10)
     source = synth_merge_source_df(spark, n_target_rows=200, seed=42)
-    states = {}
-    for planning in ("driver", "distributed"):
-        cat, t = fragmented_table(
-            spark, warehouse, name=f"ocel.m_{planning}", n_rows=200, n_files=10
+    want = column_checksums(
+        t.scan(spark)
+        .join(source.select("image_id"), "image_id", "left_anti")
+        .unionByName(
+            source.filter(F.col("_op") == "upsert").drop("_op").select(*t.schema.fieldNames())
         )
-        res = merge_into(spark, t, source, key="image_id", planning=planning)
-        assert res["status"] == "committed"
-        t.refresh()
-        states[planning] = (
-            column_checksums(t.scan(spark)),
-            res["touched_files"],
-        )
-    assert states["driver"] == states["distributed"]
+    )
+
+    def _boom(self, *a, **k):
+        raise AssertionError("merge_into read the manifest through entries_df")
+
+    monkeypatch.setattr(Table, "entries_df", _boom)
+    res = merge_into(spark, t, source, key="image_id", strategy=strategy)
+    monkeypatch.undo()
+    assert res["status"] == "committed" and res["touched_files"] > 0
+    t.refresh()
+    assert column_checksums(t.scan(spark)) == want
 
 
 def test_compaction_resume_idempotent(spark, warehouse):
@@ -315,10 +324,10 @@ def test_quality_gate(spark, warehouse):
 
 
 def test_cluster_auto_routing_schedules_no_count_job(spark, warehouse, monkeypatch):
-    """planning='auto' must route driver-vs-distributed from memoized
-    manifest footer counts (the zero-job path compact.plan_auto uses) —
-    never a Spark count job over entries_df. Enforced by making
-    DataFrame.count raise for the whole pass."""
+    """Cluster must route driver-vs-distributed from memoized manifest
+    footer counts (Table.plans_distributed) — never a Spark count job over
+    entries_df. Enforced by making DataFrame.count raise for the whole
+    pass."""
     from pyspark.sql import DataFrame
 
     cat, t = fragmented_table(spark, warehouse)
@@ -335,8 +344,8 @@ def test_cluster_auto_routing_schedules_no_count_job(spark, warehouse, monkeypat
     assert column_checksums(t.scan(spark)) == before
 
 
-def test_cluster_distributed_planning_parity(spark, warehouse):
-    """planning='distributed' (entries stay in entries_df; the driver sees
+def test_cluster_distributed_planning_parity(spark, warehouse, monkeypatch):
+    """Distributed planning (entries stay in entries_df; the driver sees
     one aggregate row per partition and commits replace_all against the
     planned snapshot) must produce the same data AND the same file layout
     as the driver planner: per-file samples and pooled quantile bounds are
@@ -344,20 +353,20 @@ def test_cluster_distributed_planning_parity(spark, warehouse):
     placement."""
     cat, t = fragmented_table(spark, warehouse)
     before = column_checksums(t.scan(spark))
-    execute_cluster(
-        spark, t, SystemTables(cat.warehouse), "ocel.images",
-        curve="zorder", planning="driver",
+    res = execute_cluster(
+        spark, t, SystemTables(cat.warehouse), "ocel.images", curve="zorder"
     )
+    assert res["planning"] == "driver"
     t.refresh()
     drv_entries = t.live_entries()
     assert column_checksums(t.scan(spark)) == before
 
     cat2, t2 = fragmented_table(spark, warehouse + "_dist")
+    monkeypatch.setattr(table_mod, "DISTRIBUTED_PLANNING_ENTRIES", 0)
     res = execute_cluster(
-        spark, t2, SystemTables(cat2.warehouse), "ocel.images",
-        curve="zorder", planning="distributed",
+        spark, t2, SystemTables(cat2.warehouse), "ocel.images", curve="zorder"
     )
-    assert res["status"] == "committed"
+    assert res["status"] == "committed" and res["planning"] == "distributed"
     t2.refresh()
     dist_entries = t2.live_entries()
     assert column_checksums(t2.scan(spark)) == before
@@ -453,16 +462,10 @@ def test_cluster_identity_string_partition(spark, warehouse):
 
 
 def test_distributed_planner_parity_and_scale(spark, warehouse):
-    """plan_compaction_distributed == plan_compaction on a real table, and
-    a 50k-entry manifest plans without driver-side entry materialization
-    (the plan collected is O(groups), built from entries_df)."""
+    """The driver planner covers the 10^4+ entry scale the removed
+    distributed planner was written for: a forged 50k-entry manifest plans
+    every input into groups no larger than the target file size."""
     from ocel_ocpn_lakehouse_spark.core import manifests as mf
-    from ocel_ocpn_lakehouse_spark.maintenance.compact import plan_compaction_distributed
-
-    cat, t = fragmented_table(spark, warehouse)
-    a = {g.group_id: sorted(g.input_paths) for g in plan_compaction(t)}
-    b = {g.group_id: sorted(g.input_paths) for g in plan_compaction_distributed(spark, t)}
-    assert a == b and len(a) > 0
 
     # forge a 50k-file manifest (no data files needed for planning)
     cat2 = Catalog(warehouse + "_big")
@@ -481,7 +484,7 @@ def test_distributed_planner_parity_and_scale(spark, warehouse):
         for i in range(50_000)
     ]
     big.commit_append(fake)
-    groups = plan_compaction_distributed(spark, big)
+    groups = plan_compaction(big)
     assert sum(len(g.input_paths) for g in groups) == 50_000
     target = big.target_file_size
     assert all(g.input_bytes <= target for g in groups)

@@ -4,8 +4,8 @@ Covers the full DV life cycle: delete_where plans/writes/commits a DV
 without touching data files; scans anti-join tombstones; repeated deletes
 are idempotent and accumulate; compaction, clustering and MERGE absorb
 DVs (rewritten files come out clean and tombstoned rows never
-resurrect); snapshot expiry sweeps orphaned DV files; planners agree
-between driver and distributed modes on tombstoned tables.
+resurrect); snapshot expiry sweeps orphaned DV files; the distributed
+cluster planner absorbs DVs like the driver planner.
 """
 
 import os
@@ -13,14 +13,11 @@ import os
 from pyspark.sql import functions as F
 
 from ocel_ocpn_lakehouse_spark.core import Catalog, PartitionSpec, SortOrder, TableSpec
+from ocel_ocpn_lakehouse_spark.core import table as table_mod
 from ocel_ocpn_lakehouse_spark.images.synth import IMAGE_SCHEMA, synth_images_df
 from ocel_ocpn_lakehouse_spark.maintenance.checkpoint import SystemTables
 from ocel_ocpn_lakehouse_spark.maintenance.cluster import execute_cluster
-from ocel_ocpn_lakehouse_spark.maintenance.compact import (
-    execute_compaction,
-    plan_compaction,
-    plan_compaction_distributed,
-)
+from ocel_ocpn_lakehouse_spark.maintenance.compact import execute_compaction, plan_compaction
 from ocel_ocpn_lakehouse_spark.maintenance.deletes import delete_where
 from ocel_ocpn_lakehouse_spark.maintenance.expire import expire_snapshots
 from ocel_ocpn_lakehouse_spark.maintenance.merge import merge_into
@@ -131,7 +128,7 @@ def test_cluster_absorbs_delete_vectors(spark, warehouse):
     assert sum(e.record_count for e in live) == want["_n"]
 
 
-def test_cluster_distributed_planning_absorbs_dvs(spark, warehouse):
+def test_cluster_distributed_planning_absorbs_dvs(spark, warehouse, monkeypatch):
     """The distributed cluster planner builds each file's DV reference with
     SQL JSON expressions over entries_df (no driver manifests); forced
     distributed planning on a tombstoned table must produce the same rows
@@ -141,11 +138,9 @@ def test_cluster_distributed_planning_absorbs_dvs(spark, warehouse):
     t = t.refresh()
     want = checksum(t.scan(spark))
 
-    r = execute_cluster(
-        spark, t, SystemTables(cat.warehouse), "ocel.images",
-        curve="zorder", planning="distributed",
-    )
-    assert r["status"] == "committed"
+    monkeypatch.setattr(table_mod, "DISTRIBUTED_PLANNING_ENTRIES", 0)
+    r = execute_cluster(spark, t, SystemTables(cat.warehouse), "ocel.images", curve="zorder")
+    assert r["status"] == "committed" and r["planning"] == "distributed"
     t = t.refresh()
     assert all(not e.deletes for e in t.live_entries())
     assert checksum(t.scan(spark)) == want
@@ -287,18 +282,6 @@ def test_partition_evolution_absorbs_dvs(spark, warehouse):
     assert all(not e.deletes for e in t.live_entries())
     assert checksum(t.scan(spark)) == want
     assert {e.partition.get("_p_image_id_bucket") for e in t.live_entries()} <= {0, 1, 2, 3}
-
-
-def test_planner_parity_with_tombstones(spark, warehouse):
-    _, t = _table(spark, warehouse)
-    delete_where(spark, t, "w = 32")
-    t = t.refresh()
-    a = plan_compaction(t)
-    b = plan_compaction_distributed(spark, t)
-    da = {g.group_id: (sorted(g.input_paths), g.input_records, g.input_dvs) for g in a}
-    db = {g.group_id: (sorted(g.input_paths), g.input_records, g.input_dvs) for g in b}
-    assert da == db and len(da) > 0
-    assert any(g.input_dvs for g in a)
 
 
 def test_delete_where_with_manifest_pruning(spark, warehouse):

@@ -196,7 +196,7 @@ def test_concurrent_appends_no_lost_updates(spark, warehouse):
 
 
 def test_scan_plans_distributed_above_threshold(spark, warehouse, monkeypatch):
-    """Above 'scan.plan-distributed-threshold' entries, scan planning runs
+    """Above DISTRIBUTED_PLANNING_ENTRIES entries, scan planning runs
     over entries_df: the driver must never materialize ManifestEntry
     objects (at 10^7 files that list is GBs of bounds/bloom JSON), prune
     with the same verdict as the driver path, and apply MoR tombstones
@@ -204,14 +204,12 @@ def test_scan_plans_distributed_above_threshold(spark, warehouse, monkeypatch):
     from ocel_ocpn_lakehouse_spark.core import manifests as mf
     from ocel_ocpn_lakehouse_spark.maintenance.deletes import delete_where
 
+    from ocel_ocpn_lakehouse_spark.core import table as table_mod
+
+    monkeypatch.setattr(table_mod, "DISTRIBUTED_PLANNING_ENTRIES", 6)
     cat = Catalog(warehouse)
     t = cat.create_table(
-        "ns.big",
-        SCHEMA,
-        TableSpec(
-            partition_spec=PartitionSpec.bucket("id", 4),
-            properties={"scan.plan-distributed-threshold": "6"},
-        ),
+        "ns.big", SCHEMA, TableSpec(partition_spec=PartitionSpec.bucket("id", 4))
     )
     for i in range(4):  # 4 appends × 4 bucket files = 16 entries
         t.append(make_df(spark, 100, start=100 * i), num_files=4)
@@ -221,7 +219,7 @@ def test_scan_plans_distributed_above_threshold(spark, warehouse, monkeypatch):
     # reference results via the driver planner; the partition predicate
     # prunes whole files (~1/4 of them), so the two planners must agree on
     # exactly which files survive
-    monkeypatch.setitem(t.md.properties, "scan.plan-distributed-threshold", "100000")
+    monkeypatch.setattr(table_mod, "DISTRIBUTED_PLANNING_ENTRIES", 100_000)
     want_all = {r["id"] for r in t.scan(spark).collect()}
     bucket = t.bucket_value(spark, "id_000100")
     preds = [PrunePredicate("_p_id_bucket", "=", bucket)]
@@ -229,7 +227,7 @@ def test_scan_plans_distributed_above_threshold(spark, warehouse, monkeypatch):
     assert len(want_all) == 390 and 0 < len(want_pruned) < len(want_all)
 
     # distributed planner: forbid ANY driver-side entry materialization
-    monkeypatch.setitem(t.md.properties, "scan.plan-distributed-threshold", "6")
+    monkeypatch.setattr(table_mod, "DISTRIBUTED_PLANNING_ENTRIES", 6)
 
     def _no_driver_entries(*a, **k):
         raise AssertionError("scan materialized ManifestEntry objects on the driver")

@@ -1,9 +1,9 @@
 """Metadata-scale stress: EXECUTE a compaction over ~100k real files.
 
 The 10^12-row design point means 10^5-10^7 data files. Planning at that
-scale is covered by the distributed planner test; this tool proves the
-EXECUTION path end-to-end: 100k tiny parquet files → distributed FFD
-plan → one Arrow rewrite job (hundreds of groups, each reading hundreds
+scale is covered by the 50k-entry forged-manifest planner test; this tool
+proves the EXECUTION path end-to-end: 100k tiny parquet files → driver
+FFD plan → one Arrow rewrite job (hundreds of groups, each reading hundreds
 of files) → single replace-snapshot commit → scan equivalence. Reports
 where the time goes and peak driver RSS.
 
@@ -16,9 +16,10 @@ fan-out at #tasks × buckets, so metadata scale stresses the planner and
 the commit, not the filesystem.
 
 `merge` runs MERGE INTO (1% deletes + 1% upserts) against the ~100k-file
-manifest — above the 10^4-file routing threshold, so planning runs
-distributed: the driver collects only bucket-pruned path strings and the
-touched files' entry rows, never the full manifest.
+manifest. Planning reads the live entries on the driver at any size: the
+commit reads every entry anyway, so keeping them off the driver while
+planning would not lower peak driver RSS. Planning and upsert sizing run
+no Spark job.
 
 `merge-bloom` compacts first (the Arrow rewrite stamps per-file Bloom
 filters for the merge key into the manifest) and then merges a SMALL key
